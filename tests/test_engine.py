@@ -25,14 +25,21 @@ def test_engine_end_to_end_and_incremental(spark):
         _write_jsonl(items, w2)  # superset → only new works append
         lake = os.path.join(td, "lake")
 
+        # the ETL path materialises only by local checkpoints: no run may
+        # leave a persisted or cached DataFrame behind in the session
+        spark.catalog.clearCache()
+        cache_manager = spark._jsparkSession.sharedState().cacheManager()
+
         eng = Engine(spark)
         vista1 = eng.run(works_jsonl=w1, lake_root=lake)
+        assert cache_manager.isEmpty()
         n1 = vista1.count()
         assert n1 > 0
         assert os.path.exists(os.path.join(lake, "obras"))
         assert eng.publications_per_year().count() > 0
 
         vista2 = eng.run(works_jsonl=w2, lake_root=lake)  # incremental
+        assert cache_manager.isEmpty()
         n2 = vista2.count()
         assert n2 >= n1
 

@@ -1,10 +1,14 @@
-"""Round-13 isolation harness: time individual queries with the noop sink
+"""Isolation harness: time individual queries with the noop sink
 (guide §1.4 — computation only, no result serialization to the driver) and
-dump their .explain('formatted') to plans/r13/<query>_<tag>.txt.
+dump their .explain('formatted') to plans/<subdir>/<query>_<tag>.txt.
 
 Usage:
-    python tools/isolate_r13.py <tag> <query> [query ...]
-    python tools/isolate_r13.py --time-only <tag> <query> [...]
+    python tools/isolate.py <subdir> <tag> <query> [query ...]
+    python tools/isolate.py --time-only <subdir> <tag> <query> [...]
+    python tools/isolate.py --plans-only <subdir> <tag> <query> [...]
+
+``subdir`` names the directory under plans/ (e.g. 'r14'); it also labels
+the Spark jobs.
 
 ``tag`` is 'before' or 'after' (anything else works too, e.g. 'probe').
 Prints one JSON line {query: {"noop_s": best-of-2, "collect_s": best-of-2}}.
@@ -47,14 +51,14 @@ def main() -> None:
     if args and args[0] == "--plans-only":
         plans_only = True
         args = args[1:]
-    tag, names = args[0], args[1:]
+    subdir, tag, names = args[0], args[1], args[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r13",
+        "plans", subdir,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("isolate_r13")
+    spark = get_spark("isolate")
     specs = load_all()
     # warmup: JVM/codegen/parquet-footer caches (same as bench.py)
     specs["q1_pricing_summary"].fn(spark, sf_dir).count()
@@ -75,15 +79,15 @@ def main() -> None:
             continue
         if name.startswith("q_stream_"):
             # streaming gates execute eagerly inside fn(); noop is moot
-            sc.setJobDescription(f"r13 {name} collect")
+            sc.setJobDescription(f"{subdir} {name} collect")
             entry["collect_s"] = best_of(lambda: fn(spark, sf_dir).collect())
         else:
-            sc.setJobDescription(f"r13 {name} noop")
+            sc.setJobDescription(f"{subdir} {name} noop")
             entry["noop_s"] = best_of(
                 lambda: fn(spark, sf_dir)
                 .write.format("noop").mode("overwrite").save()
             )
-            sc.setJobDescription(f"r13 {name} collect")
+            sc.setJobDescription(f"{subdir} {name} collect")
             entry["collect_s"] = best_of(lambda: fn(spark, sf_dir).collect())
         sc.setJobDescription(None)
         res[name] = entry

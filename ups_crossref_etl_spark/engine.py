@@ -79,18 +79,14 @@ class Engine:
         else:
             tables = ingest(self.spark, works_raw, catalog, max_works=max_works)
 
-        clean = flatview.clean_tables(tables)
-        vista = flatview.build_vista_analisis(
-            clean, catalog.select("SedeID", "Sede", "AreaAcademica")
-        )
-
         # materialize BEFORE overwriting the lake we may be reading from
         tables = {k: v.localCheckpoint() for k, v in tables.items()}
-        vista = vista.localCheckpoint()
+        vista = flatview.build_vista_analisis(
+            flatview.clean_tables(tables),
+            catalog.select("SedeID", "Sede", "AreaAcademica"),
+        )
 
-        sinks.write_lake(self.spark, tables, lake_root)
-        sinks.write_table(vista, os.path.join(lake_root, "vista_analisis"),
-                          partition_by=["Anio"])
+        sinks.write_lake(self.spark, {**tables, "vista_analisis": vista}, lake_root)
         n = tables["obras"].count()
         done = finish_run(run_row, cursor_fin=None, rows_ingested=n, notes="ok")
         sinks.write_table(done, os.path.join(lake_root, "runs"), mode="append")

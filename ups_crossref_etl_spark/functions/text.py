@@ -34,18 +34,18 @@ def _nfc_unescape(s: pd.Series) -> pd.Series:
     )
 
 
+def nfkd_deaccent_lower(x: str | None) -> str | None:
+    """HTML-unescape + NFKD + strip combining marks + lower, one string."""
+    if x is None:
+        return None
+    x = unicodedata.normalize("NFKD", html.unescape(x))
+    return "".join(ch for ch in x if not unicodedata.combining(ch)).lower()
+
+
 @pandas_udf(StringType())
 def _nfkd_deaccent_lower_unescape(s: pd.Series) -> pd.Series:
-    """HTML-unescape + NFKD + strip combining marks + lower (vectorized)."""
-
-    def one(x):
-        if x is None:
-            return None
-        x = unicodedata.normalize("NFKD", html.unescape(x))
-        x = "".join(ch for ch in x if not unicodedata.combining(ch))
-        return x.lower()
-
-    return s.map(one)
+    """``nfkd_deaccent_lower`` over an Arrow batch (vectorized)."""
+    return s.map(nfkd_deaccent_lower)
 
 
 def _collapse_ws_trim(col: Column) -> Column:

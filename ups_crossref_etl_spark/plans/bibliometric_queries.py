@@ -22,27 +22,32 @@ from ..schemas import works_raw_schema
 from ..sources.catalog import seed_catalog
 from .registry import register
 
-_CACHE: dict[str, DataFrame] = {}
+# session-scoped (keyed by id(spark)): checkpointed DFs die with the session
+_CACHE: dict[str, dict[str, DataFrame] | DataFrame] = {}
+
+
+def _tables(spark: SparkSession) -> dict[str, DataFrame]:
+    """Ingest (once per session) the fixture's five tables."""
+    key = f"tables-{id(spark)}"
+    if key not in _CACHE:
+        from .ingest import ingest
+
+        works_raw = spark.createDataFrame(make_works(), schema=works_raw_schema)
+        _CACHE[key] = ingest(spark, works_raw, seed_catalog(spark))
+    return _CACHE[key]
 
 
 def _vista(spark: SparkSession) -> DataFrame:
     """Build (once per session) the vista_analisis for the fixture."""
-    key = f"vista-{id(spark)}"  # cache is session-scoped: checkpointed DFs die with it
-    if key in _CACHE:
-        return _CACHE[key]
-    from . import analytics, flatview  # noqa: F401  (analytics used by callers)
-    from .ingest import ingest
+    key = f"vista-{id(spark)}"
+    if key not in _CACHE:
+        from . import flatview
 
-    items = make_works()
-    works_raw = spark.createDataFrame(items, schema=works_raw_schema)
-    catalog = seed_catalog(spark)
-    tables = ingest(spark, works_raw, catalog)
-    clean = flatview.clean_tables(tables)
-    vista = flatview.build_vista_analisis(
-        clean, catalog.select("SedeID", "Sede", "AreaAcademica")
-    ).localCheckpoint()
-    _CACHE[key] = vista
-    return vista
+        _CACHE[key] = flatview.build_vista_analisis(
+            flatview.clean_tables(_tables(spark)),
+            seed_catalog(spark).select("SedeID", "Sede", "AreaAcademica"),
+        ).localCheckpoint()
+    return _CACHE[key]
 
 
 @register(
@@ -101,11 +106,8 @@ def q_biblio_publications_per_area(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def q_biblio_table_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import flatview
-    from .ingest import ingest
 
-    works_raw = spark.createDataFrame(make_works(), schema=works_raw_schema)
-    catalog = seed_catalog(spark)
-    tables = ingest(spark, works_raw, catalog)
+    tables = _tables(spark)
     clean = flatview.clean_tables(tables)
     return (
         tables["obras"].agg(F.count(F.lit(1)).alias("n_obras"))
@@ -163,14 +165,7 @@ def q_biblio_dashboard_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_biblio_afiliaciones_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ingest import ingest
-
-    tables = ingest(
-        spark,
-        spark.createDataFrame(make_works(), schema=works_raw_schema),
-        seed_catalog(spark),
-    )
-    return tables["afiliaciones"].select(
+    return _tables(spark)["afiliaciones"].select(
         "AfiliacionBusqueda", "SedeID", "CountryCode", "CountryName", "EsUPS"
     )
 
@@ -189,17 +184,10 @@ def q_biblio_afiliaciones_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_biblio_autores_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ingest import ingest
-
-    tables = ingest(
-        spark,
-        spark.createDataFrame(make_works(), schema=works_raw_schema),
-        seed_catalog(spark),
-    )
     triple = F.concat_ws(
         ";", "NombreBusqueda", "NombreLimpio", F.coalesce("Orcid", F.lit(""))
     )
-    return tables["autores"].agg(
+    return _tables(spark)["autores"].agg(
         F.count(F.lit(1)).alias("n_autores"),
         F.count("Orcid").alias("n_with_orcid"),
         F.md5(

@@ -30,26 +30,16 @@ runs and partitions, unlike AUTOINCREMENT — documented divergence).
 
 from __future__ import annotations
 
-
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.graph import connected_components
 
 _RESOLVED_SCHEMA = (
     "DOI string, author_pos int, NombreBusqueda string, "
     "NombreLimpio string, Orcid string"
 )
-
-
-def _connected_components(edges: DataFrame, max_iter: int = 10) -> DataFrame:
-    """Min-label propagation over an undirected edge list (src, dst) →
-    (node, component). Delegates to the shared graph operator
-    (``operators/graph.connected_components``); author identity graphs
-    have tiny diameter so it exits in 2-4 iterations."""
-    from ..operators.graph import connected_components
-
-    return connected_components(edges, max_iter=max_iter)
 
 
 def _replay_component(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -135,12 +125,7 @@ def resolve_authors(
             F.col("Orcid").alias("orcid"),
         )
         occ = occ.unionByName(seeds)
-    occ = (
-        occ.distinct()
-        # five downstream consumers branch from occ (edges, join, replay);
-        # truncate lineage once instead of recomputing the ingest DAG
-        .localCheckpoint()
-    )
+    occ = occ.distinct()
 
     # identity edges; name-only mentions get a self-edge so they surface
     # as singleton components
@@ -150,7 +135,7 @@ def resolve_authors(
     ).otherwise(name_node)
     edges = occ.select(name_node.alias("src"), orcid_node.alias("dst")).distinct()
 
-    comp = _connected_components(edges)
+    comp = connected_components(edges)
     occ_c = occ.join(
         comp.withColumnRenamed("node", "_nn"),
         F.concat(F.lit("n:"), F.col("name_norm")) == F.col("_nn"),
@@ -177,9 +162,11 @@ def resolve_authors(
             raise RuntimeError(msg)
         warnings.warn(msg, RuntimeWarning, stacklevel=2)
 
+    # autores, the mapping and (through it) the flat view all read the
+    # replay output: materialise it once
     resolved = occ_c.groupBy("component").applyInPandas(
         lambda pdf: _replay_component(pdf), _RESOLVED_SCHEMA
-    )
+    ).localCheckpoint()
 
     autores = (
         resolved.groupBy("NombreBusqueda")

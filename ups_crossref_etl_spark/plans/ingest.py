@@ -7,6 +7,9 @@ DAG: select/filter (F3-F6, P4-P6) → explode(author) → explode(affiliation)
 (A4 sequence/affiliation sets, J6/J7 entity resolution) → P7 UPS gate →
 table outputs. Catalyst handles pushdown/pruning; the only shuffles are the
 groupBys on doi/author-key/affiliation-key and the pattern joins broadcast.
+The normalised works and the exploded mention rows are local-checkpointed
+right after the Unicode pandas_udfs, where every output table branches;
+nothing here persists or caches.
 
 Semantic decisions (SURVEY.md §7.4, each deliberate):
 - Surrogate ids are ``xxhash64`` of the natural key (not AUTOINCREMENT) —
@@ -25,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import functions as fx
+from ..functions.text import nfkd_deaccent_lower
 
 UPS_TARGET = "Universidad Politécnica Salesiana"
 
@@ -137,13 +141,8 @@ def explode_author_affiliations(works: DataFrame) -> DataFrame:
         fx.norm_text_nfkd_lower(F.col("aff.name")).alias("aff_norm"),
     ).filter(F.col("aff_norm") != "")  # P4 empty-affiliation guard (:618-620)
 
-    ups_target_norm = UPS_TARGET  # normalized at plan build below
-    import html
-    import unicodedata
-
-    t = unicodedata.normalize("NFKD", html.unescape(ups_target_norm))
-    t = "".join(ch for ch in t if not unicodedata.combining(ch)).lower()
-    is_ups = F.col("aff_norm").contains(F.lit(t))  # P6 (:625-629)
+    ups_target = nfkd_deaccent_lower(UPS_TARGET)
+    is_ups = F.col("aff_norm").contains(F.lit(ups_target))  # P6 (:625-629)
 
     return affs.select(
         "DOI",
@@ -259,17 +258,12 @@ def ingest(
     *accepted* (gated) works, per SURVEY §2.7 O2. The reference's cap is
     page-order-dependent; ours takes the first N in DOI order so reruns
     are reproducible."""
-    works = normalize_works(works_raw)
-    aff_rows = explode_author_affiliations(works)
+    # the Unicode pandas_udfs are the expensive stage and every output
+    # table branches from their results: checkpoint right after them
+    works = normalize_works(works_raw).localCheckpoint()
+    aff_rows = explode_author_affiliations(works).localCheckpoint()
     aff_rows = tag_countries(aff_rows, country_pattern_df(spark))
     aff_rows = label_sedes(aff_rows, catalog)
-    # five output tables branch from aff_rows (and the Unicode pandas_udfs
-    # upstream are the most expensive stage) — materialize once. At cluster
-    # scale this is a MEMORY_AND_DISK persist of the exploded mention table,
-    # the same table every downstream stage shuffles from.
-    from pyspark import StorageLevel
-
-    aff_rows = aff_rows.persist(StorageLevel.MEMORY_AND_DISK)
 
     # P7: keep works where any author-affiliation matched UPS (:662-663).
     # NOTE: autores/afiliaciones are built from ALL works — the reference

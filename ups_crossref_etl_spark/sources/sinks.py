@@ -5,9 +5,10 @@ Layout decisions for 100 TB (SURVEY.md §4 partition-pruning row):
 - ``obras`` / ``vista_analisis`` partitioned by ``Anio``: the dashboard's
   year-range filter (A6 + docs §2.4) becomes partition pruning — a 4-year
   window touches 4 directories regardless of table size.
-- Fact tables (``obra_autor_afiliacion``, ``events``) bucketed by their
-  join key when written as managed tables: co-locates the J1 enrichment
-  join and the A1 group-back without a shuffle.
+- ``write_lake`` does not bucket. ``write_bucketed`` writes a fact table
+  (``obra_autor_afiliacion``, ``events``) as a managed table bucketed by
+  its join key, which co-locates the J1 enrichment join and the A1
+  group-back without a shuffle; the Engine does not call it.
 - Everything snappy parquet; writes are atomic per job (no WAL needed —
   the reference's per-page commit :708 maps to one write job per batch).
 """
@@ -95,10 +96,6 @@ def write_lake(
     """Persist the full bibliometric table set with the layout policy."""
     for name, df in tables.items():
         pb = ["Anio"] if name in ("obras", "vista_analisis") else None
-        if pb and name == "obras":
-            # partition column must be non-null for pruning to help; null
-            # years land in a __HIVE_DEFAULT_PARTITION__ directory (kept).
-            pass
         write_table(df, f"{root}/{name}", partition_by=pb)
 
 
